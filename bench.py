@@ -74,7 +74,7 @@ def emit_results(payload: dict) -> dict:
         ),
     )
     try:
-        os.makedirs(os.path.dirname(detail_path), exist_ok=True)
+        os.makedirs(os.path.dirname(detail_path) or ".", exist_ok=True)
         with open(detail_path, "w") as f:
             json.dump(payload, f, indent=1)
     except OSError:
@@ -82,6 +82,106 @@ def emit_results(payload: dict) -> dict:
     compact = {k: v for k, v in payload.items() if k not in _BULKY_FIELDS}
     compact["detail_file"] = detail_path
     return compact
+
+
+def build_payload(
+    samples: dict[str, list[float]],
+    calib: dict,
+    passes: int,
+    sf: str,
+    parallelism: int,
+) -> dict:
+    """The full bench record from per-query timing samples and the
+    calibration anchor's summary; :func:`emit_results` splits it into
+    the stdout line and the sidecar."""
+    per_query: dict[str, float] = {}
+    spread: dict[str, dict[str, float]] = {}
+    total = 0.0
+    for name, ts in samples.items():
+        med = statistics.median(ts)
+        per_query[name] = round(med, 4)
+        spread[name] = {
+            "median": round(med, 4),
+            "min": round(min(ts), 4),
+            "max": round(max(ts), 4),
+        }
+        total += med
+
+    return {
+        "metric": "headline_queries_total_time",
+        "value": round(total, 4),
+        "unit": "sec",
+        "queries": per_query,
+        "spread": spread,
+        "passes": passes,
+        # host anchor + normalized series (r12): a query's
+        # calib-normalized value is its median divided by this
+        # session's calib_sec — host slowdowns cancel to first
+        # order, so THESE are the cross-round comparable numbers
+        **calib,
+        # an anchor that flags itself unstable normalizes nothing: the
+        # normalized series is left out, as in run_scale_bench
+        **(
+            {}
+            if calib.get("calib_unstable")
+            else {
+                "value_calib_norm": round(total / calib["calib_sec"], 3),
+                "queries_calib_norm": {
+                    n: round(v / calib["calib_sec"], 3)
+                    for n, v in per_query.items()
+                },
+            }
+        ),
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        # the session's REAL parallelism, so SPARK_GRAFT_CPUS
+        # honoring is observable in the artifact (session.py builds
+        # master=local[$SPARK_GRAFT_CPUS])
+        "parallelism": parallelism,
+        # r8 drift attribution (verdict r7 ask #4): the uniform
+        # +4-23% r6->r7 per-query drift is HARNESS NOISE, not a
+        # plan or registry regression. Evidence (r8, same code,
+        # same machine, minutes apart): two byte-identical full
+        # bench runs scored totals 5.91 s vs 6.78 s with
+        # per-query deltas +8%..+32%; removing dedup_minhash_lsh
+        # (the only r7 structural change + its persisted frames)
+        # made the OTHER queries 4-19% SLOWER, refuting the
+        # persisted-frame-interference hypothesis. Medians of
+        # sub-second queries on a shared container move more
+        # between runs than r6->r7 moved between rounds.
+        "noise_note": "same-code back-to-back totals differ ~15%;"
+        " cross-round per-query deltas under ~30% are not signal",
+        # r11 MEASURED noise model (VERDICT r10 ask #1): the
+        # BENCH_r10-vs-r09 +42% total was attributed by an
+        # interleaved A/B of the two pinned checkouts on one
+        # idle host (tools/run_bench_ab.py, 3 reps each,
+        # measurements/r11/bench_ab_r9_r10.json): r9 code
+        # medians 11.37/11.48/12.36 s vs r10 code
+        # 11.27/11.28/11.95 s — the r10 CODE is ~2% FASTER at
+        # matched conditions; the artifact shift was entirely
+        # host state at run time. Bands that ARE
+        # evidence: same-session same-code rep spread ±9%
+        # (measured), cross-session host band up to ±40%
+        # (10.20 -> 14.44 on identical-speed code). A
+        # cross-round total delta is only signal past the host
+        # band, or when reproduced by an interleaved A/B.
+        "noise_model": {
+            "same_session_rep_spread_pct": 9,
+            "cross_session_host_band_pct": 40,
+            "attribution": "measurements/r11/bench_ab_r9_r10.json",
+        },
+        # r8 MEASUREMENT FIX — numbers are NOT comparable to
+        # BENCH_r01..r07: materialization switched from
+        # df.count() to the noop sink. count() wraps the query
+        # in a row-count aggregate and Catalyst PRUNES every
+        # aggregate expression the count doesn't need, so all
+        # prior rounds under-measured aggregate-heavy queries
+        # (pricing_summary computed zero of its 8 aggregates;
+        # ev_daily_active_users shuffled 280 records instead of
+        # the real 981k). The noop sink computes every output
+        # column executor-side. Same-code totals: 5.9-6.8 s
+        # under count(), ~11 s under noop at sf0.1.
+        "materializer": "noop-sink (r8+; prior rounds count())",
+    }
 
 
 def main() -> None:
@@ -156,91 +256,13 @@ def main() -> None:
         except Exception:
             pass
         raise
-    calib = anchor.summary()
-
-    per_query: dict[str, float] = {}
-    spread: dict[str, dict[str, float]] = {}
-    total = 0.0
-    for name, ts in samples.items():
-        med = statistics.median(ts)
-        per_query[name] = round(med, 4)
-        spread[name] = {
-            "median": round(med, 4),
-            "min": round(min(ts), 4),
-            "max": round(max(ts), 4),
-        }
-        total += med
-
-    payload = {
-        "metric": "headline_queries_total_time",
-        "value": round(total, 4),
-        "unit": "sec",
-        "queries": per_query,
-        "spread": spread,
-        "passes": passes,
-        # host anchor + normalized series (r12): a query's
-        # calib-normalized value is its median divided by this
-        # session's calib_sec — host slowdowns cancel to first
-        # order, so THESE are the cross-round comparable numbers
-        **calib,
-        "value_calib_norm": round(total / calib["calib_sec"], 3),
-        "queries_calib_norm": {
-            n: round(v / calib["calib_sec"], 3)
-            for n, v in per_query.items()
-        },
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # r14 (VERDICT r13 ask #2b): echo the session's REAL
-        # parallelism so SPARK_GRAFT_CPUS honoring is directly
-        # observable in the artifact — the r13 driver false-flagged
-        # `suspect_cpus_ignored` because nothing in the JSON proved
-        # the env var reached the JVM (it does: session.py builds
-        # master=local[$SPARK_GRAFT_CPUS]); additive field only.
-        "parallelism": spark.sparkContext.defaultParallelism,
-                # r8 drift attribution (verdict r7 ask #4): the uniform
-                # +4-23% r6->r7 per-query drift is HARNESS NOISE, not a
-                # plan or registry regression. Evidence (r8, same code,
-                # same machine, minutes apart): two byte-identical full
-                # bench runs scored totals 5.91 s vs 6.78 s with
-                # per-query deltas +8%..+32%; removing dedup_minhash_lsh
-                # (the only r7 structural change + its persisted frames)
-                # made the OTHER queries 4-19% SLOWER, refuting the
-                # persisted-frame-interference hypothesis. Medians of
-                # sub-second queries on a shared container move more
-                # between runs than r6->r7 moved between rounds.
-                "noise_note": "same-code back-to-back totals differ ~15%;"
-                " cross-round per-query deltas under ~30% are not signal",
-                # r11 MEASURED noise model (VERDICT r10 ask #1): the
-                # BENCH_r10-vs-r09 +42% total was attributed by an
-                # interleaved A/B of the two pinned checkouts on one
-                # idle host (tools/run_bench_ab.py, 3 reps each,
-                # measurements/r11/bench_ab_r9_r10.json): r9 code
-                # medians 11.37/11.48/12.36 s vs r10 code
-                # 11.27/11.28/11.95 s — the r10 CODE is ~2% FASTER at
-                # matched conditions; the artifact shift was entirely
-                # host state at driver-run time. Bands that ARE
-                # evidence: same-session same-code rep spread ±9%
-                # (measured), cross-session host band up to ±40%
-                # (10.20 -> 14.44 on identical-speed code). A
-                # cross-round total delta is only signal past the host
-                # band, or when reproduced by an interleaved A/B.
-                "noise_model": {
-                    "same_session_rep_spread_pct": 9,
-                    "cross_session_host_band_pct": 40,
-                    "attribution": "measurements/r11/bench_ab_r9_r10.json",
-                },
-        # r8 MEASUREMENT FIX — numbers are NOT comparable to
-        # BENCH_r01..r07: materialization switched from
-        # df.count() to the noop sink. count() wraps the query
-        # in a row-count aggregate and Catalyst PRUNES every
-        # aggregate expression the count doesn't need, so all
-        # prior rounds under-measured aggregate-heavy queries
-        # (pricing_summary computed zero of its 8 aggregates;
-        # ev_daily_active_users shuffled 280 records instead of
-        # the real 981k). The noop sink computes every output
-        # column executor-side. Same-code totals: 5.9-6.8 s
-        # under count(), ~11 s under noop at sf0.1.
-        "materializer": "noop-sink (r8+; prior rounds count())",
-    }
+    payload = build_payload(
+        samples,
+        anchor.summary(),
+        passes,
+        sf,
+        spark.sparkContext.defaultParallelism,
+    )
     print(json.dumps(emit_results(payload)))
     from project_graphdb_spark.graph.algorithms import release_edge_layouts
 

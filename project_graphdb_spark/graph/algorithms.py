@@ -29,6 +29,7 @@ import os
 import threading
 import time
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -108,43 +109,30 @@ def _unpersist(sc, ids: set[int]) -> None:
     unpersist_ids(sc, ids, blocking=False)
 
 
-#: edge-frame layout for the rank-iteration family (pagerank /
-#: personalized_pagerank): "bucketed" (default since r11, MEASURED —
-#: SCALE.md finding 30) writes the edge frame ONCE as a src-bucketed
-#: sorted table so the per-iteration join reads a pre-partitioned,
-#: pre-sorted scan (zero edge-side exchange / sort in all N iterations
-#: — the Jacobi-iteration layout a 100 TB deployment would use);
-#: "checkpoint" keeps the r10 shape — the edge frame localCheckpoints
-#: once and every iteration's SMJ re-EXCHANGES it against fresh state.
-#: sf10 interleaved A/B, 3 reps each: totals 709/681/685 s (checkpoint)
-#: vs 739/369/459 s (bucketed), settled iterations ~7-10 s vs ~12-45 s.
-#: The env knob keeps both shapes runnable by the same harness.
-_EDGE_LAYOUT_ENV = "SPARK_GRAFT_PREGEL_EDGE_LAYOUT"
+#: bucket count of the src-bucketed edge layout (and of pinned state)
 _EDGE_BUCKETS = 32
 
-# Session-scoped bucketed-layout cache (r12, VERDICT r11 ask #4): the 8
-# galg_* queries each rebuilt (nearly) the same symmetrized edge table —
-# at 100 TB a sweep of the family paid N corpus-scale adjacency writes
-# where a graph-keyed shared layout does 1. The key is the edge frame's
-# ANALYZED-plan identity (Catalyst ``semanticHash`` bucket, confirmed by
-# ``sameResult`` — exprId-insensitive, so two independent constructions
-# of the same frame over the same files collide correctly), which
-# subsumes "(graph identity, symmetrized flag)": the directed and the
-# symmetrized views hash apart, two queries reading the same sf_dir hash
-# together. Contract: inputs are immutable for the session (true of the
-# parquet corpora everywhere in this repo); `release_edge_layouts` is
-# the explicit invalidation/cleanup hook — the persist/warehouse gates
-# and the long-running harnesses (bench, driver_sim, scale bench) call
-# it at end of run.
+# Session-scoped bucketed-layout cache: the galg_* queries each build
+# (nearly) the same symmetrized edge table, so a sweep of the family
+# shares one adjacency write (SCALE.md finding 34). The key is the edge
+# frame's ANALYZED-plan identity (Catalyst ``semanticHash`` bucket,
+# confirmed by ``sameResult`` — exprId-insensitive, so two independent
+# constructions of the same frame over the same files collide
+# correctly): the directed and the symmetrized views hash apart, two
+# queries reading the same sf_dir hash together. Contract: inputs are
+# immutable for the session (true of the parquet corpora everywhere in
+# this repo); `release_edge_layouts` is the explicit invalidation and
+# cleanup hook — the persist/warehouse gates and the long-running
+# harnesses (bench, driver_sim, scale bench) call it at end of run.
 _EDGE_TABLE_LOCK = threading.Lock()
 _EDGE_TABLES: dict[str, dict[int, list]] = {}
 #: (writes, hits, ...) counters for the current process — the sweep's
 #: structural evidence that the family shares one adjacency write.
-#: ``unshareable_writes``/``per_run_drops`` (r13, VERDICT r12 ask #4)
-#: count layouts whose plans can never ``sameResult``-hit (LogicalRDD /
-#: checkpoint-derived) — those take the per-run DROP path instead of
-#: cache ownership, so a long session doesn't accumulate bucketed
-#: tables it can never reuse; a healthy sweep shows the two equal.
+#: ``unshareable_writes``/``per_run_drops`` count layouts whose plans
+#: can never ``sameResult``-hit (LogicalRDD / checkpoint-derived) —
+#: those take the per-run DROP path instead of cache ownership, so a
+#: long session doesn't accumulate bucketed tables it can never reuse;
+#: a healthy sweep shows the two equal.
 EDGE_LAYOUT_STATS = {
     "writes": 0,
     "hits": 0,
@@ -152,30 +140,16 @@ EDGE_LAYOUT_STATS = {
     "per_run_drops": 0,
     "tier_checkpoint_fallbacks": 0,
 }
-#: set to "off" to disable cross-invocation reuse (the r11 shape: one
-#: table write per algorithm run, dropped by the per-run cleanup) —
-#: the A/B harness knob
-_EDGE_CACHE_ENV = "SPARK_GRAFT_PREGEL_EDGE_CACHE"
 
-#: Size-adaptive layout tier (r14, VERDICT r13 ask #8): below this
-#: optimizer-estimated edge-frame size the bucketed table write costs
-#: more than the per-iteration exchanges it removes, so the DEFAULT
-#: falls back to checkpoint mode. The decision input is
-#: ``optimizedPlan().stats().sizeInBytes`` — metadata-only (file sizes
-#: for parquet-rooted plans, row-count × row-width for checkpointed
-#: pair graphs), measured ~0.04 s even at sf10. Regime sizes on this
-#: corpus: sf0.01 ≈ 1.3 MB, sf0.1 ≈ 13 MB, sf1 ≈ 139 MB,
-#: sf10 ≈ 1.5 GB. Default decided by the r14 cold-invocation A/Bs
-#: (measurements/r14/ab_edge_tier_sf{001,01}.json): at sf0.01 (1.3 MB)
-#: checkpoint wins every query (LP 16.0 s vs 27.6 s bucketed, CC 19.1
-#: vs 21.2, dedup_clusters 12.4 vs 14.3 medians); at sf0.1 (12.7 MB)
-#: bucketed is already flat-to-faster (CC 57.0 vs 51.3, LP/PR flat,
-#: dedup_clusters a wash inside its ±20% band) — so 4 MB splits the
-#: two measured regimes, and everything ≥ sf0.1 keeps the finding-30
-#: sf10-proven bucketed default. An explicit
-#: SPARK_GRAFT_PREGEL_EDGE_LAYOUT always bypasses the tier.
-_EDGE_TIER_ENV = "SPARK_GRAFT_EDGE_LAYOUT_MIN_BYTES"
-_EDGE_TIER_MIN_BYTES_DEFAULT = 4 * 1024 * 1024
+#: Edge frames smaller than this take the checkpoint layout: there the
+#: one-time bucketed table write costs more than the per-iteration
+#: exchanges it removes. Regime sizes on this corpus: sf0.01 ≈ 1.3 MB,
+#: sf0.1 ≈ 13 MB, sf1 ≈ 139 MB, sf10 ≈ 1.5 GB. The r14 cold-invocation
+#: A/Bs (measurements/r14/ab_edge_tier_sf{001,01}.json) measured
+#: checkpoint winning every query at sf0.01 and bucketed flat-to-faster
+#: at sf0.1, so 4 MB splits the two regimes and everything from sf0.1
+#: up keeps the sf10-proven bucketed layout (SCALE.md finding 30).
+_EDGE_TIER_MIN_BYTES = 4 * 1024 * 1024
 
 
 def _edge_plan_size_bytes(edges: DataFrame) -> int:
@@ -191,7 +165,7 @@ def _edge_plan_size_bytes(edges: DataFrame) -> int:
     (a leaf referenced twice — the symmetrize union — counts twice,
     which is the right multiplicity). A LogicalRDD whose blocks are
     not in the registry falls back to the optimizer estimate
-    (conservative: over-estimates keep the pre-tier bucketed path)."""
+    (conservative: over-estimates keep the bucketed path)."""
     qe = edges._jdf.queryExecution()
     leaves = qe.analyzed().collectLeaves()
     rdd_leaf_ids = []
@@ -212,55 +186,40 @@ def _edge_plan_size_bytes(edges: DataFrame) -> int:
     return int(qe.optimizedPlan().stats().sizeInBytes())
 
 
-def _iteration_edges(edges: DataFrame, default: str = "bucketed"):
+def _iteration_edges(edges: DataFrame):
     """(edges_frame, cleanup_fn) for an N-iteration join loop.
 
-    checkpoint mode: eager localCheckpoint (cached blocks, but each
-    iteration pays an Exchange + Sort of the edge side into the SMJ).
-    bucketed mode: one bucketed+sorted table write; every iteration's
-    scan then reports HashPartitioning(src)/sorted-by-src, so only the
-    (much smaller) vertex-state side shuffles per iteration. The
-    repartition before the write aligns task boundaries with bucket
-    boundaries (same murmur3 hash), producing one file per bucket —
-    required for the scan to also satisfy the SMJ's sort order.
+    The layout follows the edge frame's measured size alone:
 
-    Bucketed tables are cached per (application, plan identity) and
-    reused across algorithm invocations in the same session — the
-    returned cleanup is then a no-op and ownership passes to
-    :func:`release_edge_layouts`. checkpoint-mode cleanup still frees
-    the blocks per run.
+    * below ``_EDGE_TIER_MIN_BYTES`` — checkpoint: eager
+      localCheckpoint (cached blocks, but each iteration pays an
+      Exchange + Sort of the edge side into the SMJ); the cleanup frees
+      the blocks.
+    * otherwise — bucketed: one bucketed+sorted table write; every
+      iteration's scan then reports HashPartitioning(src)/sorted-by-src,
+      so only the (much smaller) vertex-state side shuffles per
+      iteration. The repartition before the write aligns task
+      boundaries with bucket boundaries (same murmur3 hash), producing
+      one file per bucket — required for the scan to also satisfy the
+      SMJ's sort order.
 
-    ``default`` is per-callsite (the env var, when set, overrides it
-    everywhere — that is what the A/B harness drives). Both callsites
-    default bucketed since r11, each on its OWN sf10 A/B (finding 30):
-    the fixed-10 rank family AND the convergence-driven ``pregel``
-    driver (whose shorter loops still amortize the one-time write —
-    CC 1338.5 -> 857.3 s).
+    Bucketed tables of shareable plans are cached per (application,
+    plan identity) and reused across algorithm invocations in the same
+    session — the returned cleanup is then a no-op and ownership passes
+    to :func:`release_edge_layouts`. A LogicalRDD-rooted plan can never
+    hit that cache (:func:`_plan_shareable`), so its table is dropped
+    by the returned cleanup instead.
 
-    r14 size tier (VERDICT r13 ask #8): when the mode comes from the
-    DEFAULT (no explicit env override) and the optimizer's edge-frame
-    size estimate is below ``SPARK_GRAFT_EDGE_LAYOUT_MIN_BYTES``, fall
-    back to checkpoint mode — at tiny scale the one-time bucketed
-    write costs more than every iteration it serves (dedup_clusters'
-    checkpoint-derived pair graphs were the motivating case). An
-    estimate FAILURE keeps bucketed (the pre-tier behavior)."""
-    mode = os.environ.get(_EDGE_LAYOUT_ENV)
-    if mode is None:
-        mode = default
-        if mode == "bucketed":
-            try:
-                min_bytes = int(
-                    os.environ.get(
-                        _EDGE_TIER_ENV, str(_EDGE_TIER_MIN_BYTES_DEFAULT)
-                    )
-                )
-                if _edge_plan_size_bytes(edges) < min_bytes:
-                    mode = "checkpoint"
-                    with _EDGE_TABLE_LOCK:
-                        EDGE_LAYOUT_STATS["tier_checkpoint_fallbacks"] += 1
-            except Exception:
-                pass
-    if mode != "bucketed":
+    The size estimate reads private JVM surfaces; if they fail with a
+    py4j error the loop keeps the bucketed layout, which is correct at
+    any size. Any other error propagates."""
+    try:
+        small = _edge_plan_size_bytes(edges) < _EDGE_TIER_MIN_BYTES
+    except Py4JError:
+        small = False
+    if small:
+        with _EDGE_TABLE_LOCK:
+            EDGE_LAYOUT_STATS["tier_checkpoint_fallbacks"] += 1
         e, ids = _ckpt(edges)
 
         def cleanup(sc, _ids=ids):
@@ -271,27 +230,19 @@ def _iteration_edges(edges: DataFrame, default: str = "bucketed"):
     import uuid
 
     spark = edges.sparkSession
-    caching = os.environ.get(_EDGE_CACHE_ENV, "on") != "off"
-    jplan = None
-    if caching:
-        jplan = edges._jdf.queryExecution().analyzed()
-        if not _plan_shareable(jplan):
-            # r13 (VERDICT r12 ask #4 / ADVICE): a LogicalRDD-rooted
-            # plan (checkpoint-derived pair graphs — dedup_clusters*)
-            # can NEVER sameResult-hit a later invocation, so cache
-            # ownership only accumulates dead corpus-scale tables
-            # until release; give these the per-run DROP cleanup.
-            caching = False
-            with _EDGE_TABLE_LOCK:
-                EDGE_LAYOUT_STATS["unshareable_writes"] += 1
-    if caching:
-        app = spark.sparkContext.applicationId
+    app = spark.sparkContext.applicationId
+    jplan = edges._jdf.queryExecution().analyzed()
+    shareable = _plan_shareable(jplan)
+    if shareable:
         h = jplan.semanticHash()
         with _EDGE_TABLE_LOCK:
             for cached_plan, name in _EDGE_TABLES.get(app, {}).get(h, []):
                 if cached_plan.sameResult(jplan):
                     EDGE_LAYOUT_STATS["hits"] += 1
                     return spark.table(name), _noop_cleanup
+    else:
+        with _EDGE_TABLE_LOCK:
+            EDGE_LAYOUT_STATS["unshareable_writes"] += 1
 
     name = f"pregel_edges_{uuid.uuid4().hex[:12]}"
     (
@@ -302,7 +253,7 @@ def _iteration_edges(edges: DataFrame, default: str = "bucketed"):
         .format("parquet")
         .saveAsTable(name)
     )
-    if not caching:
+    if not shareable:
         with _EDGE_TABLE_LOCK:
             EDGE_LAYOUT_STATS["writes"] += 1
 
@@ -312,13 +263,12 @@ def _iteration_edges(edges: DataFrame, default: str = "bucketed"):
                 EDGE_LAYOUT_STATS["per_run_drops"] += 1
 
         return spark.table(name), cleanup
-    # Double-check under the lock before taking cache ownership (r13,
-    # ADVICE): a concurrent call with the same plan may have won the
-    # race while we wrote — the table write happens outside the lock
-    # on purpose (a corpus-scale write must not serialize unrelated
-    # plans), so the loser drops its duplicate and adopts the winner's.
+    # Double-check under the lock before taking cache ownership: a
+    # concurrent call with the same plan may have won the race while we
+    # wrote — the table write happens outside the lock on purpose (a
+    # corpus-scale write must not serialize unrelated plans), so the
+    # loser drops its duplicate and adopts the winner's.
     with _EDGE_TABLE_LOCK:
-        app = spark.sparkContext.applicationId
         for cached_plan, winner in _EDGE_TABLES.get(app, {}).get(h, []):
             if cached_plan.sameResult(jplan):
                 EDGE_LAYOUT_STATS["hits"] += 1
@@ -471,44 +421,32 @@ def degrees(graph: PropertyGraph) -> DataFrame:
     )
 
 
-_PIN_STATE_ENV = "SPARK_GRAFT_PIN_STATE"
-
-
-def _pin_state(state: DataFrame, default: str = "on") -> DataFrame:
+def _pin_state(state: DataFrame) -> DataFrame:
     """Hash-pin the superstep's vertex-state frame to the bucket spec
-    (r13, VERDICT r12 ask #3 — kill the second per-superstep state
-    Exchange). Context: ``localCheckpoint`` does NOT carry
-    outputPartitioning through to the LogicalRDD under AQE in this
-    Spark (measured: a pre-checkpoint ``repartition(32, "id")`` still
-    re-exchanges, ``Scan ExistingRDD`` plans as UnknownPartitioning),
-    so every superstep must shuffle state at least once. But the state
-    frame feeds TWO joins per superstep — the message join against the
-    src-bucketed edge scan and the update join against the message
-    aggregate — and EnsureRequirements plans an Exchange under each.
-    Routing both consumers through ONE shared subtree — explicit
-    null-filter INSIDE it (an inner join pushes ``isnotnull`` into one
-    branch only, which de-canonicalizes the pair), then an explicit
-    ``repartition(_EDGE_BUCKETS, id)`` — makes the two exchanges
+    so state moves once per superstep. ``localCheckpoint`` does NOT
+    carry outputPartitioning through to the LogicalRDD under AQE in
+    this Spark (measured: a pre-checkpoint ``repartition(32, "id")``
+    still re-exchanges, ``Scan ExistingRDD`` plans as
+    UnknownPartitioning), so every superstep must shuffle state at
+    least once. But in the rank family the state frame feeds the
+    message join against the src-bucketed edge scan AND the update
+    join, and EnsureRequirements plans an Exchange under each. Routing
+    every consumer through ONE shared subtree — explicit null-filter
+    INSIDE it (an inner join pushes ``isnotnull`` into one branch only,
+    which de-canonicalizes the pair), then an explicit
+    ``repartition(_EDGE_BUCKETS, id)`` — makes the exchanges
     canonically identical, so ReuseExchange plans one physical shuffle
-    + a ReusedExchange: state moves once per superstep, the floor.
-    REPARTITION_BY_NUM is exempt from AQE coalescing, so the 32
-    partitions stay co-partitioned with the 32-bucket edge layout and
-    the message join's edge side keeps its zero-exchange scan.
-    The null-filter is a no-op semantically: vertex ids are
-    ``concat_ws``-built (never null) in every caller.
+    + a ReusedExchange. REPARTITION_BY_NUM is exempt from AQE
+    coalescing, so the 32 partitions stay co-partitioned with the
+    32-bucket edge layout and the message join's edge side keeps its
+    zero-exchange scan. The null-filter is a no-op semantically: vertex
+    ids are ``concat_ws``-built (never null) in every caller.
 
-    ``default`` is per-callsite, decided by the r13 sf10 interleaved
-    A/B (SCALE.md finding 35; PR + CC, 2 reps/variant, fresh sessions,
-    per-iteration times): the RANK family (pagerank / PPR — state
-    referenced 3x per iteration) keeps "on" — iteration sums 215/381 s
-    unpinned vs 193/239 s pinned, totals −27% in both reps; the
-    generic ``pregel`` driver (state referenced 2x) keeps "off" —
-    CC iteration sums 394/310 s unpinned vs 430/350 s pinned and a
-    higher settled floor (26.5–27.7 vs 28.0–29.4 s), consistent in
-    sign across both reps. ``SPARK_GRAFT_PIN_STATE`` overrides both
-    callsites — the A/B knob, same convention as ``_EDGE_LAYOUT_ENV``."""
-    if os.environ.get(_PIN_STATE_ENV, default) == "off":
-        return state
+    Only the rank family (pagerank / personalized_pagerank, state
+    referenced 3x per superstep) pins: SCALE.md finding 35 measured it
+    −27% on totals, while the 2-reference ``pregel`` shape measured
+    ~10% slower pinned, so ``pregel``, ``label_propagation`` and
+    ``bfs_distances`` pass their state straight through."""
     return state.filter(F.col("id").isNotNull()).repartition(
         _EDGE_BUCKETS, "id"
     )
@@ -564,9 +502,8 @@ def pregel(
     """
     # the edge frame is re-read every superstep — materialize it once
     # so the per-iteration cost is one join, not (scan+distinct)+join.
-    # Bucketed by default since r11: this driver got its OWN sf10 A/B
-    # (finding 30, CC row — convergence-driven loops still amortize
-    # the one-time table write: 1338.5 -> 857.3 s, −36%).
+    # Convergence-driven loops still amortize the one-time bucketed
+    # write above the size tier (finding 30, CC row: 1338.5 -> 857.3 s).
     sc = vertices.sparkSession.sparkContext
     edges, edge_cleanup = _iteration_edges(edges)
     state, state_ids = _ckpt(
@@ -579,12 +516,7 @@ def pregel(
     try:
         for _ in range(max_iter):
             t0 = time.perf_counter()
-            # pin default OFF here: the r13 A/B (finding 35) measured
-            # the 2-reference pregel shape (CC) ~10% SLOWER pinned on
-            # iteration sums in both reps — only the 3-reference rank
-            # family wins; SPARK_GRAFT_PIN_STATE=on flips it for A/Bs
-            pinned = _pin_state(state, default="off")
-            msgs = aggregate_messages(pinned, edges, message, agg)
+            msgs = aggregate_messages(state, edges, message, agg)
             # the convergence flag is FUSED into the update projection
             # — old and new values are both in scope here, so the
             # per-round "did anything change" question costs one narrow
@@ -599,7 +531,7 @@ def pregel(
                     .cast("int")
                     .alias("__changed")
                 )
-            updated = pinned.join(msgs, "id", "left").select(*proj)
+            updated = state.join(msgs, "id", "left").select(*proj)
             updated, new_ids = _ckpt(updated)
             changed = None
             if converge_on is not None:
@@ -806,11 +738,8 @@ def label_propagation(
     try:
         for _ in range(max_iter):
             t0 = time.perf_counter()
-            # pin default OFF — LP shares the 2-reference pregel shape
-            # the finding-35 A/B measured slower pinned (see pregel)
-            pinned = _pin_state(state, default="off")
             counts = (
-                send_messages(pinned, edges, F.col("v_community"))
+                send_messages(state, edges, F.col("v_community"))
                 .groupBy("id", "__msg")
                 .agg(F.count("*").alias("__n"))
             )
@@ -821,7 +750,7 @@ def label_propagation(
                 .select("id", F.col("__msg").alias("__agg"))
             )
             updated, new_ids = _ckpt(
-                pinned.join(best, "id", "left").select(
+                state.join(best, "id", "left").select(
                     "id",
                     F.coalesce(F.col("__agg"), F.col("community")).alias(
                         "community"
@@ -1155,17 +1084,15 @@ def bfs_distances(
     Frontier expansion: one join + subtract per level; visited set and
     frontier are checkpointed so lineage stays flat.
 
-    r14 (VERDICT r13 ask #1): the per-level frontier semi-join goes
-    through :func:`_iteration_edges` — above the size tier the edge
-    frame is the family's shared src-bucketed sorted table, so NO level
-    re-exchanges or re-sorts the edge side (the old shape shuffled the
-    full symmetrized frame once per level — the repo's largest measured
-    cost, 458.5 s at sf10); below the tier it keeps the measured-
-    optimal checkpoint shape. The frontier side is small per level and
-    exchanges into the 32-bucket spec via EnsureRequirements; an
-    explicit pin (``SPARK_GRAFT_PIN_STATE=on``) is the A/B knob only —
-    the frontier has ONE consumer per level, so there is no second
-    exchange for ReuseExchange to kill (finding 35's shape rule).
+    The per-level frontier join goes through :func:`_iteration_edges`
+    — above the size tier the edge frame is the family's shared
+    src-bucketed sorted table, so NO level re-exchanges or re-sorts the
+    edge side (the per-level shuffle of the full symmetrized frame
+    measured 458.5 s at sf10); below the tier it keeps the checkpoint
+    shape. The frontier side is small per level and exchanges into the
+    32-bucket spec via EnsureRequirements; it is not pinned — the
+    frontier has ONE consumer per level, so there is no second exchange
+    for ReuseExchange to kill (finding 35's shape rule).
     """
     raw_edges = unified_edges(graph, undirected=undirected)
     sc = raw_edges.sparkSession.sparkContext
@@ -1181,9 +1108,8 @@ def bfs_distances(
     try:
         for depth in range(1, max_depth + 1):
             t0 = time.perf_counter()
-            pinned = _pin_state(frontier, default="off")
             neighbors, n_ids = _ckpt(
-                edges.join(pinned, edges.src == pinned.id)
+                edges.join(frontier, edges.src == frontier.id)
                 .select(F.col("dst").alias("id"))
                 .distinct()
                 .join(visited, "id", "left_anti")

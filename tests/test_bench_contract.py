@@ -119,3 +119,52 @@ def test_bulky_fields_do_not_include_driver_contract():
         "value_calib_norm",
     }
     assert not protected & set(bench._BULKY_FIELDS)
+
+
+def test_bare_filename_detail_path_is_written(tmp_path, monkeypatch):
+    """A detail path with no directory part names a file in the working
+    directory; it must be written, not dropped by ``makedirs('')``."""
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_DETAIL", "detail.json")
+    payload = _fake_payload()
+    compact = bench.emit_results(payload)
+    assert compact["detail_file"] == "detail.json"
+    assert json.loads((tmp_path / "detail.json").read_text()) == payload
+
+
+def _calib(unstable: bool) -> dict:
+    return {
+        "calib_sec": 2.0,
+        "calib_rep_spread": 1.9 if unstable else 1.1,
+        "calib_unstable": unstable,
+    }
+
+
+def test_payload_normalizes_against_a_stable_anchor():
+    samples = {"q_a": [1.0, 2.0, 3.0], "q_b": [4.0, 4.0, 4.0]}
+    payload = bench.build_payload(samples, _calib(False), 3, "0.1", 4)
+    assert payload["value"] == 6.0
+    assert payload["queries"] == {"q_a": 2.0, "q_b": 4.0}
+    assert payload["value_calib_norm"] == 3.0
+    assert payload["queries_calib_norm"] == {"q_a": 1.0, "q_b": 2.0}
+    assert payload["sf"] == 0.1
+    assert payload["parallelism"] == 4
+
+
+def test_payload_drops_normalized_series_on_unstable_anchor(
+    tmp_path, monkeypatch
+):
+    """An anchor that flags itself unstable must not produce normalized
+    numbers a reader could cross-compare (run_scale_bench suppresses
+    its ``sec_norm`` columns the same way); raw timings stay."""
+    samples = {"q_a": [1.0, 2.0, 3.0]}
+    payload = bench.build_payload(samples, _calib(True), 3, "0.1", 4)
+    assert "value_calib_norm" not in payload
+    assert "queries_calib_norm" not in payload
+    assert payload["calib_unstable"] is True
+    assert payload["value"] == 2.0
+    monkeypatch.setenv(
+        "SPARK_GRAFT_BENCH_DETAIL", str(tmp_path / "detail.json")
+    )
+    compact = bench.emit_results(payload)
+    assert "value_calib_norm" not in compact

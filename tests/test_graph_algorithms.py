@@ -7,10 +7,14 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from project_graphdb_spark.graph import algorithms as alg
 from project_graphdb_spark.graph.algorithms import (
     connected_components,
     pagerank,
 )
+
+#: a size floor no test graph reaches — forces the checkpoint layout
+_HUGE = 1 << 62
 
 
 def test_connected_components_two_islands(spark):
@@ -83,19 +87,18 @@ def test_pagerank_mass_conserved_on_tpch(spark, sf_dir):
 def test_pagerank_bucketed_edge_layout_equivalent(
     spark, sf_dir, monkeypatch
 ):
-    """The two edge layouts (bucketed = r11 measured default,
-    checkpoint = the r10 shape kept as a knob) must be
-    result-identical, and the bucketed run must drop its table on
-    cleanup. The sf10 A/B that picked the default lives in SCALE.md
-    finding 30."""
+    """The two edge layouts (bucketed above the size tier, checkpoint
+    below it) must be result-identical, and the bucketed table must be
+    dropped by the release hook. The sf10 A/B that picked bucketed for
+    large graphs lives in SCALE.md finding 30."""
     from project_graphdb_spark.graph.builder import tpch_graph
 
     g = tpch_graph(spark, sf_dir)
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "checkpoint")
+    monkeypatch.setattr(alg, "_EDGE_TIER_MIN_BYTES", _HUGE)
     base = {
         r.id: r.rank for r in pagerank(g, iterations=3).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "bucketed")
+    monkeypatch.setattr(alg, "_EDGE_TIER_MIN_BYTES", 0)
     bkt = {r.id: r.rank for r in pagerank(g, iterations=3).collect()}
     assert set(base) == set(bkt)
     for k, v in base.items():
@@ -127,7 +130,7 @@ def test_bucketed_edge_layout_shared_across_invocations(
     )
     from project_graphdb_spark.graph.builder import tpch_graph
 
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "bucketed")
+    monkeypatch.setattr(alg, "_EDGE_TIER_MIN_BYTES", 0)
     release_edge_layouts(spark)
 
     def tables():
@@ -405,9 +408,8 @@ def test_pregel_superstep_reuses_state_exchange(spark, sf_dir, monkeypatch):
     exactly two hash exchanges total — one REPARTITION_BY_NUM for
     state, one ENSURE_REQUIREMENTS for the message aggregate — plus a
     ReusedExchange, and the bucketed edge scan stays exchange-free."""
-    from project_graphdb_spark.graph import algorithms as alg
 
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "bucketed")
+    monkeypatch.setattr(alg, "_EDGE_TIER_MIN_BYTES", 0)
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     edges0 = orders.select(
         F.col("o_custkey").cast("string").alias("src"),
@@ -473,9 +475,8 @@ def test_unshareable_edge_layout_dropped_per_run(spark, monkeypatch):
     family) can never sameResult-hit the layout cache, so it must NOT
     take cache ownership: its bucketed table is dropped with the run,
     and the stats record the unshareable write + the per-run drop."""
-    from project_graphdb_spark.graph import algorithms as alg
 
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "bucketed")
+    monkeypatch.setattr(alg, "_EDGE_TIER_MIN_BYTES", 0)
     alg.release_edge_layouts(spark)
 
     def tables():
@@ -506,17 +507,13 @@ def test_unshareable_edge_layout_dropped_per_run(spark, monkeypatch):
     assert not alg._EDGE_TABLES.get(app)
 
 
-def test_size_tier_falls_back_to_checkpoint_below_threshold(
-    spark, sf_dir, monkeypatch
-):
-    """r14 (VERDICT r13 ask #8): with NO explicit layout override, an
-    edge frame whose optimizer size estimate is below
-    SPARK_GRAFT_EDGE_LAYOUT_MIN_BYTES must take the checkpoint shape
-    (no bucketed table write) and record the tier decision."""
-    from project_graphdb_spark.graph import algorithms as alg
+def test_size_tier_falls_back_to_checkpoint_below_threshold(spark, sf_dir):
+    """An edge frame whose size estimate is below _EDGE_TIER_MIN_BYTES
+    (the sf0.01 graph, ~1.3 MB, under the default 4 MB) must take the
+    checkpoint shape (no bucketed table write) and record the tier
+    decision."""
     from project_graphdb_spark.graph.builder import tpch_graph
 
-    monkeypatch.delenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", raising=False)
     g = tpch_graph(spark, sf_dir)
     edges = alg.unified_edges(g, undirected=True)
     before = dict(alg.EDGE_LAYOUT_STATS)
@@ -541,13 +538,11 @@ def test_size_tier_falls_back_to_checkpoint_below_threshold(
 def test_size_tier_keeps_bucketed_above_threshold(
     spark, sf_dir, monkeypatch
 ):
-    """Dropping the threshold to 0 must restore the bucketed default —
+    """Dropping the threshold to 0 must restore the bucketed layout —
     the tier only reroutes BELOW the floor."""
-    from project_graphdb_spark.graph import algorithms as alg
     from project_graphdb_spark.graph.builder import tpch_graph
 
-    monkeypatch.delenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_EDGE_LAYOUT_MIN_BYTES", "0")
+    monkeypatch.setattr(alg, "_EDGE_TIER_MIN_BYTES", 0)
     g = tpch_graph(spark, sf_dir)
     edges = alg.unified_edges(g, undirected=True)
     before = dict(alg.EDGE_LAYOUT_STATS)
@@ -564,16 +559,19 @@ def test_size_tier_keeps_bucketed_above_threshold(
         alg.release_edge_layouts(spark)
 
 
-def test_explicit_layout_env_bypasses_size_tier(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_PREGEL_EDGE_LAYOUT=bucketed is a hard override: the
-    A/B harness must be able to force the layout for frames the tier
-    would reroute."""
-    from project_graphdb_spark.graph import algorithms as alg
-    from project_graphdb_spark.graph.builder import tpch_graph
+def test_size_estimate_py4j_failure_keeps_bucketed(spark, monkeypatch):
+    """The size estimate reads private JVM surfaces; a py4j failure
+    there must fall back to the bucketed layout (correct at any size),
+    not to the checkpoint tier."""
+    from py4j.protocol import Py4JError
 
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "bucketed")
-    g = tpch_graph(spark, sf_dir)
-    edges = alg.unified_edges(g, undirected=True)
+    def broken(_edges):
+        raise Py4JError("private JVM surface moved")
+
+    monkeypatch.setattr(alg, "_edge_plan_size_bytes", broken)
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c")], "src string, dst string"
+    )
     before = dict(alg.EDGE_LAYOUT_STATS)
     e, cleanup = alg._iteration_edges(edges)
     try:
@@ -583,25 +581,38 @@ def test_explicit_layout_env_bypasses_size_tier(spark, sf_dir, monkeypatch):
             after["tier_checkpoint_fallbacks"]
             == before["tier_checkpoint_fallbacks"]
         )
+        assert sorted(map(tuple, e.collect())) == [("a", "b"), ("b", "c")]
     finally:
         cleanup(spark.sparkContext)
         alg.release_edge_layouts(spark)
+
+
+def test_size_estimate_other_failure_propagates(spark, monkeypatch):
+    """Only the py4j failure is absorbed — any other estimator error is
+    a bug and must surface."""
+
+    def broken(_edges):
+        raise ValueError("not a JVM-surface failure")
+
+    monkeypatch.setattr(alg, "_edge_plan_size_bytes", broken)
+    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
+    with pytest.raises(ValueError, match="not a JVM-surface failure"):
+        alg._iteration_edges(edges)
 
 
 def test_bfs_layouts_result_identical(spark, sf_dir, monkeypatch):
     """r14 (VERDICT r13 ask #1): BFS through the bucketed family layout
     must return exactly the frontier-expansion result of the
     checkpoint shape (integer distances — bit-exact equality)."""
-    from project_graphdb_spark.graph import algorithms as alg
     from project_graphdb_spark.graph.builder import tpch_graph
 
     g = tpch_graph(spark, sf_dir)
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "checkpoint")
+    monkeypatch.setattr(alg, "_EDGE_TIER_MIN_BYTES", _HUGE)
     base = {
         r.id: r.dist
         for r in alg.bfs_distances(g, "Customer:1", max_depth=6).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "bucketed")
+    monkeypatch.setattr(alg, "_EDGE_TIER_MIN_BYTES", 0)
     bkt = {
         r.id: r.dist
         for r in alg.bfs_distances(g, "Customer:1", max_depth=6).collect()
@@ -618,10 +629,9 @@ def test_bfs_bucketed_level_join_has_no_edge_exchange(
     scan directly (SelectedBucketsCount) with no Exchange on the edge
     side — the structural property the sf10 win rests on. Asserted
     under the SMJ regime (broadcast off) like the pregel reuse test."""
-    from project_graphdb_spark.graph import algorithms as alg
     from project_graphdb_spark.graph.builder import tpch_graph
 
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "bucketed")
+    monkeypatch.setattr(alg, "_EDGE_TIER_MIN_BYTES", 0)
     g = tpch_graph(spark, sf_dir)
     saved = {
         k: spark.conf.get(k)
