@@ -10,8 +10,8 @@ Scale design:
 
 * Each iteration is one shuffle (join on vertex id) + one aggregation.
   Vertex state is narrow (id + a few scalars).
-* ``localCheckpoint`` every ``CHECKPOINT_EVERY`` iterations cuts the
-  lineage chain — without it the plan doubles per iteration and the
+* an eager ``localCheckpoint`` every superstep cuts the lineage
+  chain — without it the plan doubles per iteration and the
   optimizer chokes long before 100 TB. On a cluster use
   ``checkpoint`` (reliable) backed by HDFS/object storage.
 * Convergence checks (``changed == 0``) are FUSED into the update
@@ -28,6 +28,8 @@ from __future__ import annotations
 import os
 import threading
 import time
+from collections.abc import Callable
+from contextlib import contextmanager
 
 from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
@@ -41,27 +43,21 @@ from project_graphdb_spark.spark_util import (
     unpersist_ids,
 )
 
-CHECKPOINT_EVERY = 5
-
-# Per-iteration wall-times of the most recent run of each iterative
+# Per-superstep wall-times of the most recent run of each iterative
 # algorithm, keyed by algorithm name. Because every superstep ends in an
 # eager localCheckpoint (and, when converging, an eager count), the loop
-# body boundaries ARE the superstep boundaries, so a perf_counter pair
-# per iteration is an accurate per-superstep timer. Driver-side
-# bookkeeping only — negligible cost, always on. The scale-bench tooling
-# (tools/run_iterative_bench.py) reads this to report how superstep cost
-# grows with data size.
+# body boundaries ARE the superstep boundaries, so timing the loop body
+# is an accurate per-superstep timer. Driver-side bookkeeping only —
+# negligible cost, always on. Written by :class:`_Supersteps`; the
+# scale-bench tooling (tools/run_iterative_bench.py) reads it to report
+# how superstep cost grows with data size.
 LAST_ITER_SECONDS: dict[str, list[float]] = {}
-
-
-def _record_iter(name: str, seconds: list[float]) -> None:
-    LAST_ITER_SECONDS[name] = [round(s, 3) for s in seconds]
 
 
 def _ckpt(df: DataFrame) -> tuple[DataFrame, set[int]]:
     """Eager localCheckpoint that also reports which block-manager RDD
-    ids the checkpoint created, so the caller can free superseded
-    superstep state with :func:`_unpersist`.
+    ids the checkpoint created, so :class:`_Supersteps` can free
+    superseded superstep state.
 
     Why: ``localCheckpoint`` pins its blocks until the RDD is GC'd, and
     the Python-side DataFrame wrapper gives no handle on the underlying
@@ -104,9 +100,81 @@ def _ckpt(df: DataFrame) -> tuple[DataFrame, set[int]]:
         return out, persistent_rdd_ids(sc) - before
 
 
-def _unpersist(sc, ids: set[int]) -> None:
-    """Free the given block-manager RDD ids (non-blocking)."""
-    unpersist_ids(sc, ids, blocking=False)
+class _Supersteps:
+    """The one owner of an iterative loop's superstep bookkeeping.
+
+    Every iterative loop here (and ``corpus.bpe_train``) runs inside
+    ``with _Supersteps(name, sc) as run:``, which
+
+    * picks the edge layout (:meth:`edges`) and runs its cleanup on exit;
+    * checkpoints through :func:`_ckpt` and holds the new blocks —
+      ``replaces=`` frees the predecessor once its successor is
+      materialized, so N supersteps never pin N copies of state;
+    * times each ``with run.superstep():`` body into
+      ``LAST_ITER_SECONDS[name]`` (clean exits only);
+    * on a clean exit lingers the blocks behind the :meth:`result`
+      frame (the returned lazy plan still reads them) and frees the
+      rest; on any exception frees every held block.
+
+    Blocks are matched to frames by LogicalRDD leaves: a checkpointed
+    frame's plan is a LogicalRDD over exactly the RDD its checkpoint
+    persisted, and BFS's union of levels has one leaf per level.
+    """
+
+    def __init__(self, name: str, sc) -> None:
+        self._name = name
+        self._sc = sc
+        self._held: set[int] = set()
+        self._secs: list[float] = []
+        self._layout_cleanup = _noop_cleanup
+        self._result: DataFrame | None = None
+
+    def __enter__(self) -> "_Supersteps":
+        return self
+
+    def edges(self, edges: DataFrame) -> DataFrame:
+        """The loop's edge frame in its iteration layout."""
+        out, self._layout_cleanup = _iteration_edges(edges)
+        return out
+
+    def ckpt(
+        self, df: DataFrame, replaces: DataFrame | None = None
+    ) -> DataFrame:
+        out, ids = _ckpt(df)
+        self._held |= ids
+        if replaces is not None:
+            self._free(_frame_rdd_ids(replaces))
+        return out
+
+    @contextmanager
+    def superstep(self):
+        t0 = time.perf_counter()
+        yield
+        self._secs.append(time.perf_counter() - t0)
+
+    def result(self, df: DataFrame) -> DataFrame:
+        """Mark ``df`` as the loop's returned frame."""
+        self._result = df
+        return df
+
+    def _free(self, ids: set[int]) -> None:
+        ids = ids & self._held
+        self._held -= ids
+        unpersist_ids(self._sc, ids, blocking=False)
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        try:
+            if exc_type is None:
+                LAST_ITER_SECONDS[self._name] = [
+                    round(s, 3) for s in self._secs
+                ]
+                if self._result is not None:
+                    keep = self._held & _frame_rdd_ids(self._result)
+                    self._held -= keep
+                    linger_ids(self._sc, keep)
+            self._free(self._held)
+        finally:
+            self._layout_cleanup(self._sc)
 
 
 #: bucket count of the src-bucketed edge layout (and of pinned state)
@@ -144,12 +212,31 @@ EDGE_LAYOUT_STATS = {
 #: Edge frames smaller than this take the checkpoint layout: there the
 #: one-time bucketed table write costs more than the per-iteration
 #: exchanges it removes. Regime sizes on this corpus: sf0.01 ≈ 1.3 MB,
-#: sf0.1 ≈ 13 MB, sf1 ≈ 139 MB, sf10 ≈ 1.5 GB. The r14 cold-invocation
-#: A/Bs (measurements/r14/ab_edge_tier_sf{001,01}.json) measured
+#: sf0.1 ≈ 13 MB, sf1 ≈ 139 MB, sf10 ≈ 1.5 GB. Cold-invocation A/Bs
+#: (measurements/r14/ab_edge_tier_sf{001,01}.json) measured
 #: checkpoint winning every query at sf0.01 and bucketed flat-to-faster
 #: at sf0.1, so 4 MB splits the two regimes and everything from sf0.1
 #: up keeps the sf10-proven bucketed layout (SCALE.md finding 30).
 _EDGE_TIER_MIN_BYTES = 4 * 1024 * 1024
+
+
+def _logical_rdd_ids(jplan) -> list[int]:
+    """RDD ids of the LogicalRDD leaves of a JVM logical plan, one per
+    leaf occurrence (a leaf referenced twice is listed twice).
+    LogicalRDD leaves come from localCheckpoint / checkpoint /
+    createDataFrame-from-RDD."""
+    leaves = jplan.collectLeaves()
+    nodes = (leaves.apply(i) for i in range(leaves.length()))
+    return [
+        n.rdd().id()
+        for n in nodes
+        if n.getClass().getSimpleName() == "LogicalRDD"
+    ]
+
+
+def _frame_rdd_ids(df: DataFrame) -> set[int]:
+    """Block-manager RDD ids a frame's plan reads from checkpoints."""
+    return set(_logical_rdd_ids(df._jdf.queryExecution().analyzed()))
 
 
 def _edge_plan_size_bytes(edges: DataFrame) -> int:
@@ -167,12 +254,7 @@ def _edge_plan_size_bytes(edges: DataFrame) -> int:
     not in the registry falls back to the optimizer estimate
     (conservative: over-estimates keep the bucketed path)."""
     qe = edges._jdf.queryExecution()
-    leaves = qe.analyzed().collectLeaves()
-    rdd_leaf_ids = []
-    for i in range(leaves.length()):
-        leaf = leaves.apply(i)
-        if leaf.getClass().getSimpleName() == "LogicalRDD":
-            rdd_leaf_ids.append(leaf.rdd().id())
+    rdd_leaf_ids = _logical_rdd_ids(qe.analyzed())
     if rdd_leaf_ids:
         infos = {
             info.id(): info.memSize() + info.diskSize()
@@ -221,11 +303,7 @@ def _iteration_edges(edges: DataFrame):
         with _EDGE_TABLE_LOCK:
             EDGE_LAYOUT_STATS["tier_checkpoint_fallbacks"] += 1
         e, ids = _ckpt(edges)
-
-        def cleanup(sc, _ids=ids):
-            _unpersist(sc, _ids)
-
-        return e, cleanup
+        return e, lambda sc: unpersist_ids(sc, ids)
 
     import uuid
 
@@ -295,11 +373,7 @@ def _plan_shareable(jplan) -> bool:
     by RDD identity, so a plan rooted in one is unshareable by
     construction — cache ownership would retain its bucketed table for
     the whole session with zero chance of a hit."""
-    leaves = jplan.collectLeaves()
-    for i in range(leaves.length()):
-        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD":
-            return False
-    return True
+    return not _logical_rdd_ids(jplan)
 
 
 def _noop_cleanup(sc) -> None:
@@ -452,24 +526,32 @@ def _pin_state(state: DataFrame) -> DataFrame:
     )
 
 
+def send_messages(
+    state: DataFrame, edges: DataFrame, message: Column
+) -> DataFrame:
+    """Un-aggregated message pass: (id, __msg) per in-edge of each
+    destination. ``message`` sees edge columns + ``v_<state>``."""
+    src_state = state.select(
+        F.col("id").alias("__src_id"),
+        *[F.col(c).alias(f"v_{c}") for c in state.columns if c != "id"],
+    )
+    return edges.join(src_state, edges.src == F.col("__src_id")).select(
+        F.col("dst").alias("id"), message.alias("__msg")
+    )
+
+
 def aggregate_messages(
     state: DataFrame, edges: DataFrame, message: Column, agg: Column
 ) -> DataFrame:
-    """One superstep's message pass: join source-vertex state onto the
-    edges (state columns visible as ``v_<col>``), evaluate ``message``
-    per edge, aggregate at the destination. Returns (id, __agg).
+    """One superstep's message pass: :func:`send_messages` aggregated
+    at the destination. Returns (id, __agg).
 
     This is the aggregate-messages primitive every Pregel-style
     algorithm below is built from — one shuffle (the join) plus one
     aggregation per superstep.
     """
-    src_state = state.select(
-        F.col("id").alias("__src_id"),
-        *[F.col(c).alias(f"v_{c}") for c in state.columns if c != "id"],
-    )
     return (
-        edges.join(src_state, edges.src == F.col("__src_id"))
-        .select(F.col("dst").alias("id"), message.alias("__msg"))
+        send_messages(state, edges, message)
         .groupBy("id")
         .agg(agg.alias("__agg"))
     )
@@ -505,64 +587,42 @@ def pregel(
     # Convergence-driven loops still amortize the one-time bucketed
     # write above the size tier (finding 30, CC row: 1338.5 -> 857.3 s).
     sc = vertices.sparkSession.sparkContext
-    edges, edge_cleanup = _iteration_edges(edges)
-    state, state_ids = _ckpt(
-        vertices.select(
-            "id", *[col.alias(name) for name, col in initial.items()]
+    with _Supersteps(telemetry_name, sc) as run:
+        edges = run.edges(edges)
+        state = run.ckpt(
+            vertices.select(
+                "id", *[col.alias(name) for name, col in initial.items()]
+            )
         )
-    )
-    iter_secs: list[float] = []
-    new_ids: set[int] = set()
-    try:
         for _ in range(max_iter):
-            t0 = time.perf_counter()
-            msgs = aggregate_messages(state, edges, message, agg)
-            # the convergence flag is FUSED into the update projection
-            # — old and new values are both in scope here, so the
-            # per-round "did anything change" question costs one narrow
-            # column plus one agg over the frame we checkpoint anyway,
-            # instead of a separate new ⋈ old join job per superstep
-            proj = ["id"] + [
-                col.alias(name) for name, col in update.items()
-            ]
-            if converge_on is not None:
-                proj.append(
-                    (~update[converge_on].eqNullSafe(F.col(converge_on)))
-                    .cast("int")
-                    .alias("__changed")
+            with run.superstep():
+                msgs = aggregate_messages(state, edges, message, agg)
+                # the convergence flag is FUSED into the update
+                # projection — old and new values are both in scope
+                # here, so "did anything change" costs one narrow
+                # column plus one agg over the frame we checkpoint
+                # anyway, not a separate new ⋈ old join per superstep
+                proj = ["id"] + [
+                    col.alias(name) for name, col in update.items()
+                ]
+                if converge_on is not None:
+                    proj.append(
+                        (~update[converge_on].eqNullSafe(F.col(converge_on)))
+                        .cast("int")
+                        .alias("__changed")
+                    )
+                state = run.ckpt(
+                    state.join(msgs, "id", "left").select(*proj),
+                    replaces=state,
                 )
-            updated = state.join(msgs, "id", "left").select(*proj)
-            updated, new_ids = _ckpt(updated)
-            changed = None
-            if converge_on is not None:
-                changed = updated.agg(
-                    F.coalesce(F.sum("__changed"), F.lit(0))
-                ).collect()[0][0]
-                updated = updated.drop("__changed")
-            # the old state is superseded the moment its successor is
-            # materialized (the fused flag already captured the diff)
-            _unpersist(sc, state_ids)
-            state, state_ids = updated, new_ids
-            iter_secs.append(time.perf_counter() - t0)
-            if changed == 0:
-                break
-    except BaseException:
-        # a failed superstep (task failure past retries, OOM, ...)
-        # must not strand the last checkpointed state's blocks — nor
-        # the JUST-checkpointed successor's, when the failure lands
-        # between _ckpt(updated) and the state swap (e.g. the
-        # convergence-count job dies); unpersist is idempotent, so
-        # freeing both sets is safe whichever side of the swap we're on
-        _unpersist(sc, state_ids)
-        _unpersist(sc, new_ids)
-        raise
-    finally:
-        # checkpoint-mode edge blocks are freed success OR failure;
-        # bucketed-mode layouts are cache-owned (release_edge_layouts)
-        edge_cleanup(sc)
-    _record_iter(telemetry_name, iter_secs)
-    linger_ids(sc, state_ids)  # final superstep blocks back the result
-    return state
+                if converge_on is not None:
+                    changed = state.agg(
+                        F.coalesce(F.sum("__changed"), F.lit(0))
+                    ).collect()[0][0]
+                    state = state.drop("__changed")
+                    if changed == 0:
+                        break
+        return run.result(state)
 
 
 def connected_components(
@@ -643,68 +703,51 @@ def k_core(
         assert edges is not None
         directed = edges.select("src", "dst").distinct()
     sc = directed.sparkSession.sparkContext
-    canon, canon_ids = _ckpt(
-        directed.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        ).distinct()
-    )
-    ends = canon.select(F.col("a").alias("id")).unionAll(
-        canon.filter(F.col("a") != F.col("b")).select(
-            F.col("b").alias("id")
+    with _Supersteps("k_core", sc) as run:
+        canon = run.ckpt(
+            directed.select(
+                F.least("src", "dst").alias("a"),
+                F.greatest("src", "dst").alias("b"),
+            ).distinct()
         )
-    )
-    deg, deg_ids = _ckpt(
-        ends.groupBy("id").agg(F.count("*").alias("deg"))
-    )
-    iter_secs: list[float] = []
-    for _ in range(max_iter):
-        t0 = time.perf_counter()
-        removed = deg.filter(F.col("deg") < k)
-        n_removed = removed.count()
-        if n_removed == 0:
-            iter_secs.append(time.perf_counter() - t0)
-            break
-        nbr = canon.join(
-            removed.select(F.col("id").alias("a")), "a", "left_semi"
-        ).select(F.col("b").alias("id")).unionAll(
-            canon.join(
-                removed.select(F.col("id").alias("b")), "b", "left_semi"
-            ).select(F.col("a").alias("id"))
+        ends = canon.select(F.col("a").alias("id")).unionAll(
+            canon.filter(F.col("a") != F.col("b")).select(
+                F.col("b").alias("id")
+            )
         )
-        delta = nbr.groupBy("id").agg(F.count("*").alias("__delta"))
-        survivors = deg.filter(F.col("deg") >= k)
-        new_deg = survivors.join(delta, "id", "left").select(
-            "id",
-            (F.col("deg") - F.coalesce("__delta", F.lit(0))).alias("deg"),
+        deg = run.ckpt(ends.groupBy("id").agg(F.count("*").alias("deg")))
+        for _ in range(max_iter):
+            with run.superstep():
+                removed = deg.filter(F.col("deg") < k)
+                if removed.count() == 0:
+                    break
+                nbr = canon.join(
+                    removed.select(F.col("id").alias("a")), "a", "left_semi"
+                ).select(F.col("b").alias("id")).unionAll(
+                    canon.join(
+                        removed.select(F.col("id").alias("b")),
+                        "b",
+                        "left_semi",
+                    ).select(F.col("a").alias("id"))
+                )
+                delta = nbr.groupBy("id").agg(F.count("*").alias("__delta"))
+                survivors = deg.filter(F.col("deg") >= k)
+                new_deg = survivors.join(delta, "id", "left").select(
+                    "id",
+                    (F.col("deg") - F.coalesce("__delta", F.lit(0))).alias(
+                        "deg"
+                    ),
+                )
+                deg = run.ckpt(new_deg, replaces=deg)
+        # the result frame owns its own checkpoint; deg and canon are
+        # freed on exit
+        return run.result(
+            run.ckpt(
+                deg.select(
+                    "id", F.col("deg").cast("bigint").alias("core_degree")
+                )
+            )
         )
-        new_deg, new_ids = _ckpt(new_deg)
-        _unpersist(sc, deg_ids)
-        deg, deg_ids = new_deg, new_ids
-        iter_secs.append(time.perf_counter() - t0)
-    out = deg.select(
-        "id", F.col("deg").cast("bigint").alias("core_degree")
-    )
-    out, out_ids = _ckpt(out)
-    linger_ids(sc, out_ids)  # result frame owns these blocks
-    _unpersist(sc, deg_ids)
-    _unpersist(sc, canon_ids)
-    _record_iter("k_core", iter_secs)
-    return out
-
-
-def send_messages(
-    state: DataFrame, edges: DataFrame, message: Column
-) -> DataFrame:
-    """Un-aggregated message pass: (id, __msg) per in-edge of each
-    destination. ``message`` sees edge columns + ``v_<state>``."""
-    src_state = state.select(
-        F.col("id").alias("__src_id"),
-        *[F.col(c).alias(f"v_{c}") for c in state.columns if c != "id"],
-    )
-    return edges.join(src_state, edges.src == F.col("__src_id")).select(
-        F.col("dst").alias("id"), message.alias("__msg")
-    )
 
 
 def label_propagation(
@@ -723,51 +766,42 @@ def label_propagation(
         vertices = unified_vertices(graph)
         edges = unified_edges(graph, undirected=True)
     assert vertices is not None and edges is not None
+    # the same bucketed layout and shared layout cache as the pregel and
+    # pagerank drivers: without it every superstep pays an edge-side
+    # Exchange + Sort, and a symmetrized view that connected_components
+    # already laid out in this session is reused for free (SCALE.md
+    # finding 36)
     sc = vertices.sparkSession.sparkContext
-    # r13: bucketed layout + shared layout cache, same as the pregel /
-    # pagerank drivers — LP was the last iteration loop still paying an
-    # edge-side Exchange + Sort per superstep (and, when a graph's
-    # symmetrized view is already cached by connected_components in the
-    # same session, the layout is free). sf10 A/B in SCALE.md.
-    edges, edge_cleanup = _iteration_edges(edges)
-
-    state, state_ids = _ckpt(
-        vertices.select("id", F.col("id").alias("community"))
-    )
-    iter_secs: list[float] = []
-    try:
+    with _Supersteps("label_propagation", sc) as run:
+        edges = run.edges(edges)
+        state = run.ckpt(
+            vertices.select("id", F.col("id").alias("community"))
+        )
         for _ in range(max_iter):
-            t0 = time.perf_counter()
-            counts = (
-                send_messages(state, edges, F.col("v_community"))
-                .groupBy("id", "__msg")
-                .agg(F.count("*").alias("__n"))
-            )
-            w = W.partitionBy("id").orderBy(F.desc("__n"), F.asc("__msg"))
-            best = (
-                counts.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .select("id", F.col("__msg").alias("__agg"))
-            )
-            updated, new_ids = _ckpt(
-                state.join(best, "id", "left").select(
-                    "id",
-                    F.coalesce(F.col("__agg"), F.col("community")).alias(
-                        "community"
-                    ),
+            with run.superstep():
+                counts = (
+                    send_messages(state, edges, F.col("v_community"))
+                    .groupBy("id", "__msg")
+                    .agg(F.count("*").alias("__n"))
                 )
-            )
-            _unpersist(sc, state_ids)
-            state, state_ids = updated, new_ids
-            iter_secs.append(time.perf_counter() - t0)
-    except BaseException:
-        _unpersist(sc, state_ids)
-        raise
-    finally:
-        edge_cleanup(sc)
-    _record_iter("label_propagation", iter_secs)
-    linger_ids(sc, state_ids)  # final superstep blocks back the result
-    return state
+                w = W.partitionBy("id").orderBy(
+                    F.desc("__n"), F.asc("__msg")
+                )
+                best = (
+                    counts.withColumn("__rn", F.row_number().over(w))
+                    .filter(F.col("__rn") == 1)
+                    .select("id", F.col("__msg").alias("__agg"))
+                )
+                state = run.ckpt(
+                    state.join(best, "id", "left").select(
+                        "id",
+                        F.coalesce(F.col("__agg"), F.col("community")).alias(
+                            "community"
+                        ),
+                    ),
+                    replaces=state,
+                )
+        return run.result(state)
 
 
 def triangle_count(
@@ -833,6 +867,74 @@ def triangle_count(
     )
 
 
+def _rank_loop(
+    name: str,
+    vertices: DataFrame,
+    edges: DataFrame,
+    rank0: Column,
+    teleport: Callable[[Column], Column],
+    iterations: int,
+    damping: float,
+) -> DataFrame:
+    """(id, rank) — the power iteration shared by :func:`pagerank` and
+    :func:`personalized_pagerank`. ``rank0`` is the initial rank column
+    and ``teleport(m)`` the per-vertex constant term of the update, as a
+    function of the superstep's dangling mass ``m``. Fixed iteration
+    count (deterministic plan shape)."""
+    with _Supersteps(name, vertices.sparkSession.sparkContext) as run:
+        edges = run.edges(edges)
+        out_deg = edges.groupBy(F.col("src").alias("id")).agg(
+            F.count("*").alias("out_degree")
+        )
+        state = vertices.join(out_deg, "id", "left").na.fill(
+            0, ["out_degree"]
+        )
+        state = run.ckpt(state.withColumn("rank", rank0))
+        for _ in range(iterations):
+            with run.superstep():
+                # shared pinned subtree: contribs join, dangling agg,
+                # and the update join all consume ONE physical state
+                # exchange (ReuseExchange) — see _pin_state
+                pinned = _pin_state(state)
+                contribs = (
+                    edges.join(pinned, edges.src == pinned.id)
+                    .select(
+                        "dst",
+                        (F.col("rank") / F.col("out_degree")).alias("c"),
+                    )
+                    .groupBy(F.col("dst").alias("id"))
+                    .agg(F.sum("c").alias("received"))
+                )
+                # Dangling vertices donate their rank through the
+                # teleport term. Kept as a one-row DataFrame
+                # broadcast-cross-joined into the update (not
+                # .collect()ed) so the whole superstep stays one lazy
+                # plan — no extra driver job per superstep.
+                dangling = pinned.filter(F.col("out_degree") == 0).agg(
+                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias(
+                        "__dangling_m"
+                    )
+                )
+                new_state = (
+                    pinned.drop("rank")
+                    .join(contribs, "id", "left")
+                    .crossJoin(F.broadcast(dangling))
+                    .withColumn(
+                        "rank",
+                        teleport(F.col("__dangling_m"))
+                        + F.lit(damping)
+                        * F.coalesce(F.col("received"), F.lit(0.0)),
+                    )
+                    .drop("received", "__dangling_m")
+                )
+                # Unlike the Pregel loop, each superstep references
+                # the state twice (dangling-mass subtree + the main
+                # update), so un-checkpointed lineage doubles per
+                # superstep — checkpoint every step.
+                state = run.ckpt(new_state, replaces=state)
+        return run.result(state.select("id", "rank"))
+
+
 def pagerank(
     graph: PropertyGraph,
     iterations: int = 10,
@@ -841,70 +943,17 @@ def pagerank(
     """(id, rank) — classic power iteration with dangling-mass
     redistribution, fixed iteration count (deterministic plan shape)."""
     vertices = unified_vertices(graph)
-    sc = vertices.sparkSession.sparkContext
-    edges, edge_cleanup = _iteration_edges(unified_edges(graph))
     n = vertices.count()
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("out_degree")
+    return _rank_loop(
+        "pagerank",
+        vertices,
+        unified_edges(graph),
+        F.lit(1.0 / n),
+        lambda m: F.lit((1.0 - damping) / n)
+        + F.lit(damping) * m / F.lit(float(n)),
+        iterations,
+        damping,
     )
-    state = vertices.join(out_deg, "id", "left").na.fill(0, ["out_degree"])
-    state, state_ids = _ckpt(state.withColumn("rank", F.lit(1.0 / n)))
-
-    iter_secs: list[float] = []
-    try:
-        for i in range(iterations):
-            t0 = time.perf_counter()
-            # shared pinned subtree: contribs join, dangling agg, and
-            # the update join all consume ONE physical state exchange
-            # (ReuseExchange) — see _pin_state
-            pinned = _pin_state(state)
-            contribs = (
-                edges.join(pinned, edges.src == pinned.id)
-                .select(
-                    "dst", (F.col("rank") / F.col("out_degree")).alias("c")
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("c").alias("received"))
-            )
-            # Dangling vertices donate their rank uniformly. Kept as a
-            # one-row DataFrame broadcast-cross-joined into the update
-            # (not .collect()ed) so the whole iteration stays one lazy
-            # plan that fuses with the checkpoint cadence — no extra
-            # driver job per iteration.
-            dangling = pinned.filter(F.col("out_degree") == 0).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dangling_m")
-            )
-            new_state = (
-                pinned.drop("rank")
-                .join(contribs, "id", "left")
-                .crossJoin(F.broadcast(dangling))
-                .withColumn(
-                    "rank",
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * F.col("__dangling_m")
-                    / F.lit(float(n))
-                    + F.lit(damping)
-                    * F.coalesce(F.col("received"), F.lit(0.0)),
-                )
-                .drop("received", "__dangling_m")
-            )
-            # Unlike the Pregel loop, each iteration references `state`
-            # twice (dangling-mass subtree + the main update), so
-            # un-checkpointed lineage doubles per iteration —
-            # checkpoint every step.
-            new_state, new_ids = _ckpt(new_state)
-            _unpersist(sc, state_ids)
-            state, state_ids = new_state, new_ids
-            iter_secs.append(time.perf_counter() - t0)
-    except BaseException:
-        _unpersist(sc, state_ids)
-        raise
-    finally:
-        edge_cleanup(sc)
-    _record_iter("pagerank", iter_secs)
-    linger_ids(sc, state_ids)  # final superstep blocks back the result
-    return state.select("id", "rank")
 
 
 def personalized_pagerank(
@@ -919,68 +968,21 @@ def personalized_pagerank(
     recommendation primitive): the teleport vector is concentrated on
     ``source_id`` instead of uniform, and dangling mass restarts at the
     source too, so ranks measure proximity to the source rather than
-    global centrality. Same power-iteration / checkpoint-cadence shape
-    as :func:`pagerank`; fixed iteration count keeps the plan
-    deterministic. Vertices unreachable from the source keep rank 0 —
-    exact, not an artifact."""
-    sc = vertices.sparkSession.sparkContext
-    edges, edge_cleanup = _iteration_edges(edges)
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("out_degree")
-    )
+    global centrality. Same power iteration as :func:`pagerank`.
+    Vertices unreachable from the source keep rank 0 — exact, not an
+    artifact."""
     is_src = F.col("id") == source_id
-    state = vertices.join(out_deg, "id", "left").na.fill(0, ["out_degree"])
-    state, state_ids = _ckpt(
-        state.withColumn(
-            "rank", F.when(is_src, F.lit(1.0)).otherwise(F.lit(0.0))
-        )
+    return _rank_loop(
+        "personalized_pagerank",
+        vertices,
+        edges,
+        F.when(is_src, F.lit(1.0)).otherwise(F.lit(0.0)),
+        lambda m: F.when(
+            is_src, F.lit(1.0 - damping) + F.lit(damping) * m
+        ).otherwise(F.lit(0.0)),
+        iterations,
+        damping,
     )
-
-    iter_secs: list[float] = []
-    try:
-        for _ in range(iterations):
-            t0 = time.perf_counter()
-            # shared pinned subtree — see _pin_state / pagerank
-            pinned = _pin_state(state)
-            contribs = (
-                edges.join(pinned, edges.src == pinned.id)
-                .select(
-                    "dst", (F.col("rank") / F.col("out_degree")).alias("c")
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("c").alias("received"))
-            )
-            dangling = pinned.filter(F.col("out_degree") == 0).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dangling_m")
-            )
-            new_state = (
-                pinned.drop("rank")
-                .join(contribs, "id", "left")
-                .crossJoin(F.broadcast(dangling))
-                .withColumn(
-                    "rank",
-                    F.when(
-                        is_src,
-                        F.lit(1.0 - damping)
-                        + F.lit(damping) * F.col("__dangling_m"),
-                    ).otherwise(F.lit(0.0))
-                    + F.lit(damping)
-                    * F.coalesce(F.col("received"), F.lit(0.0)),
-                )
-                .drop("received", "__dangling_m")
-            )
-            new_state, new_ids = _ckpt(new_state)
-            _unpersist(sc, state_ids)
-            state, state_ids = new_state, new_ids
-            iter_secs.append(time.perf_counter() - t0)
-    except BaseException:
-        _unpersist(sc, state_ids)
-        raise
-    finally:
-        edge_cleanup(sc)
-    _record_iter("personalized_pagerank", iter_secs)
-    linger_ids(sc, state_ids)  # final superstep blocks back the result
-    return state.select("id", "rank")
 
 
 def shortest_paths(
@@ -1021,6 +1023,41 @@ def shortest_paths(
     )
 
 
+def _bfs_levels(
+    run: _Supersteps,
+    edges: DataFrame,
+    start: DataFrame,
+    keys: tuple[str, ...],
+    max_depth: int,
+) -> DataFrame:
+    """The BFS level loop shared by :func:`bfs_distances` (``keys`` =
+    ``("id",)``) and :func:`multi_source_hops` (``("root", "id")``):
+    (*keys, dist) from the ``start`` frame at dist 0.
+
+    ``visited`` stays a LAZY union of the per-level checkpointed
+    frontier frames — re-materializing the whole growing visited set
+    every level would be O(levels x |visited|) copy work; each union
+    leaf here is a checkpoint scan, so lineage stays O(depth) and no
+    row is ever written twice. The level blocks back the returned
+    frame, so ``run`` lingers them on exit."""
+    visited = run.ckpt(start)
+    frontier = visited
+    for depth in range(1, max_depth + 1):
+        with run.superstep():
+            neighbors = run.ckpt(
+                edges.join(frontier, edges.src == frontier.id)
+                .select(*keys[:-1], F.col("dst").alias("id"))
+                .distinct()
+                .join(visited, list(keys), "left_anti")
+                .select(*keys, F.lit(depth).alias("dist"))
+            )
+            if neighbors.isEmpty():
+                break
+        visited = visited.unionByName(neighbors)
+        frontier = neighbors
+    return visited
+
+
 def multi_source_hops(
     edges: DataFrame,
     sources: DataFrame,
@@ -1033,44 +1070,20 @@ def multi_source_hops(
     is keyed by (root, id), so a single pass serves all roots — the
     Cypher shortestPath lowering uses this with the anchored endpoint
     set as roots. Frontier joins shuffle on ``src``; state is
-    checkpointed per level so lineage stays flat (same cadence as
-    :func:`bfs_distances`). State size is O(sum of reachable sets),
-    which is why the compiler anchors BFS on the more selective
-    endpoint.
+    checkpointed per level so lineage stays flat (the
+    :func:`_bfs_levels` loop :func:`bfs_distances` runs too). State
+    size is O(sum of reachable sets), which is why the compiler anchors
+    BFS on the more selective endpoint.
     """
-    sc = sources.sparkSession.sparkContext
-    visited, kept_ids = _ckpt(
-        sources.select(
+    with _Supersteps(
+        "multi_source_hops", sources.sparkSession.sparkContext
+    ) as run:
+        start = sources.select(
             "root", F.col("root").alias("id"), F.lit(0).alias("dist")
         )
-    )
-    # ``visited`` stays a LAZY union of the per-level checkpointed
-    # frontier frames — the old form re-materialized the whole growing
-    # visited set every level (O(levels x |visited|) copy work); each
-    # union leaf here is a checkpoint scan, so lineage stays O(depth)
-    # and no row is ever written twice. Level blocks stay pinned: they
-    # back the returned frame (caller releases them).
-    frontier = visited
-    iter_secs: list[float] = []
-    for depth in range(1, max_depth + 1):
-        t0 = time.perf_counter()
-        neighbors, n_ids = _ckpt(
-            edges.join(frontier, edges.src == frontier.id)
-            .select("root", F.col("dst").alias("id"))
-            .distinct()
-            .join(visited, ["root", "id"], "left_anti")
-            .select("root", "id", F.lit(depth).alias("dist"))
+        return run.result(
+            _bfs_levels(run, edges, start, ("root", "id"), max_depth)
         )
-        iter_secs.append(time.perf_counter() - t0)
-        if neighbors.isEmpty():
-            _unpersist(sc, n_ids)
-            break
-        kept_ids |= n_ids
-        visited = visited.unionByName(neighbors)
-        frontier = neighbors
-    _record_iter("multi_source_hops", iter_secs)
-    linger_ids(sc, kept_ids)  # level blocks back the returned union
-    return visited
 
 
 def bfs_distances(
@@ -1095,35 +1108,15 @@ def bfs_distances(
     for ReuseExchange to kill (finding 35's shape rule).
     """
     raw_edges = unified_edges(graph, undirected=undirected)
-    sc = raw_edges.sparkSession.sparkContext
-    edges, edge_cleanup = _iteration_edges(raw_edges)
-    visited, kept_ids = _ckpt(
-        unified_vertices(graph)
-        .filter(F.col("id") == start_id)
-        .select("id", F.lit(0).alias("dist"))
-    )
-    # lazy union over per-level checkpoints — see multi_source_hops
-    frontier = visited
-    iter_secs: list[float] = []
-    try:
-        for depth in range(1, max_depth + 1):
-            t0 = time.perf_counter()
-            neighbors, n_ids = _ckpt(
-                edges.join(frontier, edges.src == frontier.id)
-                .select(F.col("dst").alias("id"))
-                .distinct()
-                .join(visited, "id", "left_anti")
-                .select("id", F.lit(depth).alias("dist"))
-            )
-            iter_secs.append(time.perf_counter() - t0)
-            if neighbors.isEmpty():
-                _unpersist(sc, n_ids)
-                break
-            kept_ids |= n_ids
-            visited = visited.unionByName(neighbors)
-            frontier = neighbors
-    finally:
-        edge_cleanup(sc)
-    _record_iter("bfs_distances", iter_secs)
-    linger_ids(sc, kept_ids)  # level blocks back the returned union
-    return visited
+    with _Supersteps(
+        "bfs_distances", raw_edges.sparkSession.sparkContext
+    ) as run:
+        edges = run.edges(raw_edges)
+        start = (
+            unified_vertices(graph)
+            .filter(F.col("id") == start_id)
+            .select("id", F.lit(0).alias("dist"))
+        )
+        return run.result(
+            _bfs_levels(run, edges, start, ("id",), max_depth)
+        )

@@ -63,8 +63,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # 0.99-1.08), orders (150k rows) is a wash on revenue queries and a
 # 38% regression on top3_customers_per_nation (1.20 s vs 0.75 s off),
 # lineitem (600k rows) wins 30-48% on every consumer. Hence the 200k
-# default floor: only tables whose serial scan-stage work dominates
-# the exchange cost spread.
+# floor: only tables whose serial scan-stage work dominates the
+# exchange cost spread.
 #
 # Scale honesty: the spread fires only when the INPUT's intrinsic
 # parallelism (row-group count) cannot feed the session's cores AND the
@@ -72,7 +72,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # inputs (every at-scale layout, including tools/gen_scale_data.py
 # output) and small dimensions are untouched, so at 100 TB this is a
 # structural no-op — it is input-layout adaptivity, not a local[32]
-# tuning constant. SPARK_GRAFT_SPREAD_SCAN=off disables it for A/Bs.
+# tuning constant.
 _SPREAD_KEYS = {
     "lineitem": "l_orderkey",
     "orders": "o_orderkey",
@@ -81,7 +81,7 @@ _SPREAD_KEYS = {
     "part": "p_partkey",
     "supplier": "s_suppkey",
 }
-_SPREAD_MIN_ROWS_DEFAULT = 200_000
+_SPREAD_MIN_ROWS = 200_000
 # memo key is (path, mtime_ns, size) so an in-process rewrite of a table
 # file (data regen tooling) invalidates the cached footer metadata
 # (ADVICE r13); values never touch row data
@@ -102,14 +102,18 @@ def _single_file_layout(path: str) -> tuple[int, int] | None:
     if got is not False:
         return got
     layout: tuple[int, int] | None = None
-    try:
-        if os.path.isfile(path):
-            import pyarrow.parquet as pq
+    if os.path.isfile(path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
+        # an unreadable or non-parquet file just stays unspread; any
+        # other error is a bug and propagates
+        try:
             meta = pq.ParquetFile(path).metadata
+        except (OSError, pa.ArrowInvalid):
+            pass
+        else:
             layout = (meta.num_row_groups, meta.num_rows)
-    except Exception:
-        layout = None
     _LAYOUT_MEMO[memo_key] = layout
     return layout
 
@@ -121,10 +125,6 @@ def _spread_if_unsplittable(
     name: str,
     spread_key: str | None = None,
 ) -> DataFrame:
-    # both knobs are read PER CALL (ADVICE r13 — the min-rows floor used
-    # to bind at import time while the on/off switch was per-call)
-    if os.environ.get("SPARK_GRAFT_SPREAD_SCAN", "auto") == "off":
-        return df
     key = spread_key or _SPREAD_KEYS.get(name)
     if key is None:
         return df
@@ -132,13 +132,8 @@ def _spread_if_unsplittable(
     if layout is None:
         return df
     row_groups, rows = layout
-    min_rows = int(
-        os.environ.get(
-            "SPARK_GRAFT_SPREAD_MIN_ROWS", str(_SPREAD_MIN_ROWS_DEFAULT)
-        )
-    )
     n = spark.sparkContext.defaultParallelism
-    if rows >= min_rows and row_groups < n:
+    if rows >= _SPREAD_MIN_ROWS and row_groups < n:
         return df.repartition(n, key)
     return df
 

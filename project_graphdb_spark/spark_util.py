@@ -55,15 +55,15 @@ def free_all_persistent(spark, run_jvm_gc: bool = True) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Shared lingering-persist window (r10, VERDICT r9 ask #7)
+# Shared lingering-persist window
 # ---------------------------------------------------------------------------
 # Frames persisted/checkpointed by a builder but consumed by the
-# RETURNED lazy plan cannot be released inside the builder — the
-# pattern corpus.py solved locally in r9 (its dup-span `_LINGERING`)
-# and the r10 persist-leak gate (tests/test_persist_gate.py) found in
-# SIX more families: the Pregel algorithms' final superstep
-# checkpoints, both BFS's level blocks, the winnow fingerprint frame,
-# the bigram model, and the roundtrip sinks' checkpointed results.
+# RETURNED lazy plan cannot be released inside the builder. The
+# persist-leak gate (tests/test_persist_gate.py) finds this in seven
+# families: the dup-span persists, the Pregel algorithms' final
+# superstep checkpoints, both BFS's level blocks, the winnow
+# fingerprint frame, the bigram model, and the roundtrip sinks'
+# checkpointed results.
 # One shared rolling window: every registered query releases the
 # PREVIOUS query's lingering entries when it starts (workload.register
 # wraps each fn), so at most one query's frames outlive their
@@ -186,7 +186,7 @@ def adaptive_broadcast(
     the MEASURED row count: one narrow count job over the slice, hint
     only under the guard, shuffle-join fallback above it.
 
-    Two guards, both required (ADVICE r9): ``max_rows`` bounds the
+    Two guards, both required: ``max_rows`` bounds the
     hash-relation entry count, ``max_bytes`` bounds its estimated size
     (measured rows x schema-derived row width, `_est_row_bytes`) so a
     just-under-guard slice of a WIDE table is never forced onto every
@@ -197,7 +197,7 @@ def adaptive_broadcast(
     build) launch ONE narrow count job per distinct slice per session,
     not one per ``fn()`` call — plan-shape tests and ``plan_facts``
     consumers that rebuild the same query repay nothing after the
-    first build (ADVICE r9). The first build's count job is accepted
+    first build. The first build's count job is accepted
     and documented: it is the price of a measurement the planner
     cannot make statically.
     """
@@ -232,11 +232,11 @@ def memoized_count(df) -> int:
 
 def classify_bnlj(df) -> dict:
     """Classify every nested-loop join in the EXECUTED plan by whether
-    its broadcast build side is structurally bounded (r10, VERDICT r9
-    nit #5: a 1-row BroadcastNestedLoopJoin — min-ts derivation, a
-    global-scalar cutoff, a literal-keyed probe — is not a cartesian
-    regression, and lumping them under one ``cartesian`` flag forced
-    manual adjudication every round).
+    its broadcast build side is structurally bounded. A 1-row
+    BroadcastNestedLoopJoin — min-ts derivation, a global-scalar
+    cutoff, a literal-keyed probe — is not a cartesian regression, and
+    one undifferentiated ``cartesian`` flag would force every such
+    plan to be adjudicated by hand.
 
     Bounded evidence, found anywhere in the build-side subtree:
 
@@ -323,7 +323,8 @@ def materialize(df) -> int:
     ``df.count()`` is NOT a faithful benchmark materializer: it wraps
     the plan in a new row-count aggregate and Catalyst's column pruning
     then deletes every aggregate expression the count doesn't reference
-    — measured r8 on ``ev_daily_active_users``, where count() shuffled
+    — measured on ``ev_daily_active_users`` (SCALE.md finding 16),
+    where count() shuffled
     280 records (distinct days only) while the real query shuffles
     ~981k (day, user) pairs. The noop sink forces full column
     computation with zero driver collection.
@@ -331,10 +332,11 @@ def materialize(df) -> int:
     The row total rides along in the SAME pass via ``df.observe``
     (a ``CollectMetrics`` node above the final plan — rows flow through
     it to the sink with every column intact, and the count is an
-    executor-side metric, not a second execution). r8 used a trailing
-    ``df.count()`` here, which re-executed the (pruned) plan inside the
-    callers' timed windows — near-doubling iterative-algorithm timings
-    and polluting the twin bench's cold-run stage attribution.
+    executor-side metric, not a second execution). A trailing
+    ``df.count()`` here would re-execute the (pruned) plan inside the
+    callers' timed windows (SCALE.md finding 20) — near-doubling
+    iterative-algorithm timings and polluting the twin bench's cold-run
+    stage attribution.
     """
     from pyspark.sql import Observation
     from pyspark.sql import functions as F

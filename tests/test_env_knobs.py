@@ -31,9 +31,6 @@ ALLOWED = {
     "SPARK_GRAFT_BENCH_PASSES",
     "SPARK_GRAFT_BENCH_SKIP",
     "SPARK_GRAFT_CALIB_DIR",
-    # single-file scan spreading (io/tables.py)
-    "SPARK_GRAFT_SPREAD_MIN_ROWS",
-    "SPARK_GRAFT_SPREAD_SCAN",
 }
 
 
@@ -64,4 +61,4 @@ def test_env_knobs_match_allowlist():
         f"allowlisted names no longer read anywhere: "
         f"{sorted(ALLOWED - set(found))} — take them off the list"
     )
-    assert len(ALLOWED) == 14
+    assert len(ALLOWED) == 12

@@ -14,6 +14,8 @@ FUTURE registry addition too.
 
 from __future__ import annotations
 
+import pytest
+
 from project_graphdb_spark import workload
 from project_graphdb_spark.spark_util import materialize, persistent_rdd_ids
 
@@ -118,6 +120,112 @@ def test_injected_superstep_failure_leaves_clean_state(
         if t.name.startswith("pregel_edges_")
     ]
     assert not leftover, leftover
+
+
+def _path_edges(spark):
+    return spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d")], "src string, dst string"
+    )
+
+
+def _tpch(spark, sf_dir):
+    from project_graphdb_spark.graph.builder import tpch_graph
+
+    return tpch_graph(spark, sf_dir)
+
+
+def _k_core_case(spark, sf_dir):
+    from project_graphdb_spark.graph.algorithms import k_core
+
+    # the path a-b-c-d at k=2 peels {a, d}, then {b, c}
+    edges = _path_edges(spark)
+    return lambda: k_core(k=2, edges=edges)
+
+
+def _bfs_case(spark, sf_dir):
+    from project_graphdb_spark.graph.algorithms import bfs_distances
+
+    g = _tpch(spark, sf_dir)
+    return lambda: bfs_distances(g, "Customer:1", max_depth=3)
+
+
+def _msh_case(spark, sf_dir):
+    from project_graphdb_spark.graph.algorithms import multi_source_hops
+
+    edges = _path_edges(spark)
+    sources = spark.createDataFrame([("a",)], "root string")
+    return lambda: multi_source_hops(edges, sources, 3)
+
+
+def _pagerank_case(spark, sf_dir):
+    from project_graphdb_spark.graph.algorithms import pagerank
+
+    g = _tpch(spark, sf_dir)
+    return lambda: pagerank(g, iterations=3)
+
+
+def _label_propagation_case(spark, sf_dir):
+    from project_graphdb_spark.graph.algorithms import label_propagation
+
+    verts = spark.createDataFrame(
+        [(v,) for v in "abcd"], "id string"
+    )
+    edges = _path_edges(spark)
+    return lambda: label_propagation(
+        vertices=verts, edges=edges, max_iter=3
+    )
+
+
+def _bpe_case(spark, sf_dir):
+    from project_graphdb_spark.operators.corpus import bpe_train
+
+    docs = spark.createDataFrame(
+        [("low lower lowest",), ("low newest wider",)], "text string"
+    )
+    return lambda: bpe_train(docs, n_merges=3)
+
+
+# name -> (input builder, 1-based number of the checkpoint call that
+# writes the SECOND superstep's state; earlier calls are the edge
+# layout (forced to the checkpoint tier below), the initial state and
+# the first superstep)
+_FAILURE_CASES = {
+    "k_core": (_k_core_case, 4),  # canonical edges, degrees, round 1
+    "bfs_distances": (_bfs_case, 4),  # edges, start, level 1
+    "multi_source_hops": (_msh_case, 3),  # start, level 1
+    "pagerank": (_pagerank_case, 4),  # edges, ranks, superstep 1
+    "label_propagation": (_label_propagation_case, 4),
+    "bpe_train": (_bpe_case, 3),  # vocab, merge round 1
+}
+
+
+@pytest.mark.parametrize("name", sorted(_FAILURE_CASES))
+def test_injected_failure_in_second_superstep_frees_blocks(
+    spark, sf_dir, monkeypatch, name
+):
+    """Every iterative loop frees every checkpoint block it holds —
+    edge layout, static frames, superseded and current state, kept BFS
+    levels — when its second superstep fails."""
+    from project_graphdb_spark.graph import algorithms as alg
+
+    build, nth = _FAILURE_CASES[name]
+    monkeypatch.setattr(alg, "_EDGE_TIER_MIN_BYTES", 1 << 62)
+    run = build(spark, sf_dir)
+    sc = spark.sparkContext
+    before = persistent_rdd_ids(sc)
+    calls = {"n": 0}
+    real = alg._ckpt
+
+    def failing_ckpt(df):
+        calls["n"] += 1
+        if calls["n"] == nth:
+            raise RuntimeError("injected superstep failure")
+        return real(df)
+
+    monkeypatch.setattr(alg, "_ckpt", failing_ckpt)
+    with pytest.raises(RuntimeError, match="injected"):
+        run()
+    assert persistent_rdd_ids(sc) - before == set()
 
 
 def test_convergence_job_failure_frees_fresh_checkpoint(

@@ -48,19 +48,13 @@ def test_sf001_never_spreads(spark, sf_dir):
         assert "REPARTITION_BY_NUM" not in _plan(df), name
 
 
-def test_off_knob_disables(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_SCAN", "off")
-    df = load_table(spark, SF01, "lineitem")
-    assert "REPARTITION_BY_NUM" not in _plan(df)
-
-
 def test_directory_input_is_never_spread(spark, tmp_path, monkeypatch):
     """Directory layouts (every at-scale dataset) must not spread even
     above the row floor — their parallelism comes from the files."""
     out = tmp_path / "lineitem.parquet"
     src = load_table(spark, SF01, "lineitem")
     src.limit(1000).repartition(4).write.parquet(str(out))
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MIN_ROWS", "1")
+    monkeypatch.setattr(tables, "_SPREAD_MIN_ROWS", 1)
     df = load_table(spark, str(tmp_path), "lineitem")
     assert "REPARTITION_BY_NUM" not in _plan(df)
 
@@ -72,17 +66,39 @@ def test_copied_single_file_spreads_above_floor(spark, tmp_path, monkeypatch):
         os.path.join(SF01, "orders.parquet"),
         tmp_path / "orders.parquet",
     )
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MIN_ROWS", "1")
+    monkeypatch.setattr(tables, "_SPREAD_MIN_ROWS", 1)
     df = load_table(spark, str(tmp_path), "orders")
     assert "REPARTITION_BY_NUM" in _plan(df)
 
 
-def test_min_rows_knob_is_read_per_call(spark, monkeypatch):
-    """ADVICE r13: both knobs bind at call time — raising the floor
-    after import must stop the lineitem spread."""
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MIN_ROWS", "100000000")
+def test_raised_floor_stops_the_spread(spark, monkeypatch):
+    """The row floor is read at call time — raising it above lineitem's
+    row count must stop the lineitem spread."""
+    monkeypatch.setattr(tables, "_SPREAD_MIN_ROWS", 100_000_000)
     df = load_table(spark, SF01, "lineitem")
     assert "REPARTITION_BY_NUM" not in _plan(df)
+
+
+def test_non_parquet_file_has_no_layout(tmp_path):
+    """A file whose footer cannot be read as parquet stays unspread."""
+    path = tmp_path / "lineitem.parquet"
+    path.write_text("not a parquet file")
+    assert tables._single_file_layout(str(path)) is None
+
+
+def test_unexpected_footer_error_propagates(tmp_path, monkeypatch):
+    """Only unreadable-file failures mean "no layout" — any other error
+    from the footer read is a bug and must surface."""
+    import pyarrow.parquet as pq
+
+    def broken(_path):
+        raise TypeError("not a footer-read failure")
+
+    path = tmp_path / "orders.parquet"
+    path.write_bytes(b"PAR1")
+    monkeypatch.setattr(pq, "ParquetFile", broken)
+    with pytest.raises(TypeError, match="not a footer-read failure"):
+        tables._single_file_layout(str(path))
 
 
 def test_caller_spread_key_overrides_default(spark):
